@@ -134,16 +134,12 @@ def q_seq_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = ks_by_partition(
-        None, "part_month", None, precomputed=_drift_sketch(spark, sf_dir)
-    )
+    out = ks_by_partition(_drift_sketch(spark, sf_dir), "part_month")
     return _round6(out, ["ks_d", "ks_p"])
 
 
 def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = psi_by_partition(
-        None, "part_month", None, precomputed=_drift_sketch(spark, sf_dir)
-    )
+    out = psi_by_partition(_drift_sketch(spark, sf_dir), "part_month")
     return _round6(out, ["psi"])
 
 
@@ -183,9 +179,7 @@ def q_drift_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement — the integral counterpart of drift_ks's max gap."""
     from matric_spark.checks.drift import emd_by_partition
 
-    out = emd_by_partition(
-        None, "part_month", None, precomputed=_drift_sketch(spark, sf_dir)
-    )
+    out = emd_by_partition(_drift_sketch(spark, sf_dir), "part_month")
     return _round6(out, ["emd"])
 
 
@@ -195,9 +189,7 @@ def q_colstats_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     referential/drift check fires."""
     from matric_spark.checks.drift import entropy_by_partition
 
-    out = entropy_by_partition(
-        None, "part_month", None, precomputed=_drift_sketch(spark, sf_dir)
-    )
+    out = entropy_by_partition(_drift_sketch(spark, sf_dir), "part_month")
     return _round6(out, ["entropy"])
 
 
@@ -1150,9 +1142,7 @@ def q_events_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal drift: KS of floor(value) for each DAY cohort vs the rest
     of the event stream — the time-axis twin of drift_ks's partition
     cohorts."""
-    out = ks_by_partition(
-        None, "cohort", None, precomputed=_events_sketch(spark, sf_dir)
-    )
+    out = ks_by_partition(_events_sketch(spark, sf_dir), "cohort")
     return _round6(out, ["ks_d", "ks_p"])
 
 
@@ -1162,9 +1152,7 @@ def q_events_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude complement to events_drift's KS)."""
     from matric_spark.checks.drift import emd_by_partition
 
-    out = emd_by_partition(
-        None, "cohort", None, precomputed=_events_sketch(spark, sf_dir)
-    )
+    out = emd_by_partition(_events_sketch(spark, sf_dir), "cohort")
     return _round6(out, ["emd"])
 
 
@@ -2047,8 +2035,8 @@ ks AS (SELECT p, np AS n_part, n_total - np AS n_rest,
 """
 
 
-# the EMD tail over the shared cnt→cum grid (assumes the _KS_CTES /
-# _ks_ctes chain in scope; the trailing unused `ks` CTE is harmless).
+# the EMD tail over the shared cnt→cum grid (assumes the _ks_ctes chain
+# in scope; the trailing unused `ks` CTE is harmless).
 # The coalesce fallback mirrors emd_by_partition's degenerate guard:
 # CASE WHEN np < n_total (not a bare 0.0), so a single-cohort input
 # yields NULL emd on BOTH engines.
@@ -2072,27 +2060,7 @@ SELECT p AS {part_out}, n_part, n_rest, (round(ks_d, 6) + 0) AS ks_d,
 FROM (SELECT *, CAST(n_part AS DOUBLE) * n_rest / (n_part + n_rest) AS ne FROM ks) y"""
 
 
-_KS_CTES = """
-cnt AS (SELECT part_month p, length(text) v, CAST(count(*) AS BIGINT) c
-        FROM transcripts WHERE text IS NOT NULL GROUP BY 1, 2),
-parts AS (SELECT p, CAST(sum(c) AS BIGINT) np FROM cnt GROUP BY 1),
-tot AS (SELECT v, CAST(sum(c) AS BIGINT) ct FROM cnt GROUP BY 1),
-ntot AS (SELECT CAST(sum(np) AS BIGINT) n_total FROM parts),
-grid AS (SELECT parts.p, parts.np, tot.v, tot.ct FROM parts CROSS JOIN tot),
-jj AS (SELECT g.p, g.np, g.v, g.ct, COALESCE(cnt.c, 0) c, ntot.n_total
-       FROM grid g LEFT JOIN cnt ON cnt.p = g.p AND cnt.v = g.v CROSS JOIN ntot),
-cum AS (SELECT p, np, n_total, v,
-               sum(c)  OVER (PARTITION BY p ORDER BY v) cum_c,
-               sum(ct) OVER (PARTITION BY p ORDER BY v) cum_t,
-               lead(v) OVER (PARTITION BY p ORDER BY v) next_v
-        FROM jj),
-ks AS (SELECT p, np AS n_part, n_total - np AS n_rest,
-              max(abs(CAST(cum_c AS DOUBLE) / np
-                      - CAST(cum_t - cum_c AS DOUBLE) / (n_total - np))) ks_d
-       FROM cum GROUP BY p, np, n_total)
-"""
-
-# assumes the `cnt` and `parts` CTEs from _KS_CTES are already in scope
+# assumes the `cnt` and `parts` CTEs from _ks_ctes are already in scope
 _PSI_FROM_CNT = """
 bcnt AS (SELECT p, least(CAST(floor(v / 50.0) AS BIGINT), CAST(19 AS BIGINT)) b,
                 CAST(sum(c) AS BIGINT) c
@@ -2178,7 +2146,7 @@ SELECT conv_id, turn_idx, ts, part_month FROM (
 WHERE ts < prev_max"""
 
     sql["drift_ks"] = f"""{_T},
-{_KS_CTES}
+{_ks_ctes("transcripts", "part_month", "length(text)")}
 {_KS_P_SELECT.format(part_out="part_month")}"""
 
     sql["role_latency"] = f"""{_T},
@@ -2224,10 +2192,10 @@ SELECT conv_id, CAST(count(*) AS BIGINT) AS n_rows,
 FROM transcripts GROUP BY conv_id
 HAVING count(DISTINCT part_month) > 1"""
 
-    # shares the _KS_CTES cnt→cum scaffolding (now carrying v/next_v)
+    # shares the _ks_ctes cnt→cum scaffolding (now carrying v/next_v)
     # so a parity fix to the KS grid applies to EMD automatically
     sql["drift_emd"] = f"""{_T},
-{_KS_CTES}
+{_ks_ctes("transcripts", "part_month", "length(text)")}
 {_EMD_SELECT.format(part_out="part_month")}"""
 
     sql["events_emd"] = f"""WITH
@@ -2382,7 +2350,7 @@ dupk AS (SELECT conv_id, turn_idx FROM transcripts WHERE conv_id IS NOT NULL AND
 uniq AS (SELECT t.part_month AS part, CAST(count(*) AS BIGINT) uniqueness
          FROM transcripts t JOIN dupk USING (conv_id, turn_idx) GROUP BY 1),
 ooo AS ({_OOO_SQL}),
-{_KS_CTES},
+{_ks_ctes("transcripts", "part_month", "length(text)")},
 {_PSI_FROM_CNT},
 wide AS (
   SELECT s.part, s.ref_role, s.ref_tool, s.null_text, s.null_ts,

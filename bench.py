@@ -29,9 +29,9 @@ def run_once(fn, spark, sf_dir) -> float:
 def setup_transcripts(spark, sf_dir: str) -> str:
     """Materialize the derived transcript table to partitioned parquet
     once and point SPARK_GRAFT_TRANSCRIPTS_PARQUET at it — the shared
-    prelude for every measurement harness (bench.py,
-    tools/adjudicate_bench.py), kept in ONE place so the materialization
-    contract (partition column, env var) cannot drift between them. In
+    prelude for every measurement harness (bench.py, perfbench/run.py),
+    kept in ONE place so the materialization contract (partition column,
+    env var) cannot drift between them. In
     production this table EXISTS as Iceberg storage; locally it derives
     from lineitem⋈orders, and without materializing every query would
     re-run that derivation join. Parquet (vs .cache()) keeps column

@@ -1,4 +1,5 @@
-"""Distribution-drift checks between partition cohorts: KS + PSI.
+"""Distribution-drift checks between partition cohorts: KS, PSI, EMD and
+entropy over one shared counts sketch.
 
 Reference lineage: matric's core analytic move is comparing a signal
 cohort's distribution against a background cohort per group — z-scaling
@@ -15,13 +16,18 @@ directly, matching the collate `type` = signal|background discriminator
 (R/sim_collate.R:480-504).
 
 Scale notes (the whole point): drift is computed on AGGREGATES ONLY.
-One groupBy(partition, value) pass reduces 10^12 rows to
-|parts|x|distinct values| counts; every subsequent join/window touches
-only that sketch. ECDFs for the complement cohort come from
-(total - partition) arithmetic, so the raw table is scanned exactly once,
-and the partition x value grid is a cross join of two tiny aggregates.
-Value cardinality is bounded by bucketing (PSI) or naturally small
-domains (text length); for unbounded domains pass a bucketized value.
+``counts_sketch`` is the one table scan: a groupBy(partition, value)
+that reduces 10^12 rows to |parts| x |distinct values| counts. Every
+statistic here takes that (p, v, c) sketch as its only input, so callers
+build (or materialize) it once and fan out without rescanning. ECDFs for
+the complement cohort come from (total - partition) arithmetic over ONE
+value grid (``_cdf_grid``: the full partition x value product, a cross
+join of two tiny aggregates). KS and PSI both come out of
+``drift_by_partition``, which aggregates that grid to PSI buckets —
+per-bucket count sums plus the max ECDF gap — so the two statistics
+share one grid and one relation. Value cardinality is bounded by
+bucketing (PSI) or naturally small domains (text length); for unbounded
+domains sketch a bucketized value.
 """
 
 from __future__ import annotations
@@ -29,9 +35,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+KS_TERMS = 3  # Smirnov series terms in the asymptotic KS p-value
+PSI_BUCKET_WIDTH = 50.0
+PSI_BUCKETS = 20  # values past the last bucket's lower edge share it
+PSI_EPS = 0.5  # add-eps smoothing keeps empty buckets finite
 
-def _counts(df: DataFrame, partition_col: str, value: Column) -> DataFrame:
-    """One scan: counts per (partition, value), nulls excluded."""
+
+def counts_sketch(df: DataFrame, partition_col: str, value: Column) -> DataFrame:
+    """The shared (p, v, c) sketch every drift/entropy statistic
+    consumes: one scan, counts per (partition, value), nulls excluded.
+    Compute it once (or materialize it) and fan out to
+    ks/psi/emd/entropy without rescanning the table."""
     return (
         df.select(F.col(partition_col).alias("p"), value.alias("v"))
         .filter(F.col("v").isNotNull())
@@ -40,21 +54,15 @@ def _counts(df: DataFrame, partition_col: str, value: Column) -> DataFrame:
     )
 
 
-def counts_sketch(df: DataFrame, partition_col: str, value: Column) -> DataFrame:
-    """Public builder for the shared (p, v, c) sketch every drift/
-    entropy statistic consumes via ``precomputed`` — compute it once
-    (or materialize it) and fan out to ks/psi/emd/entropy without
-    rescanning the table."""
-    return _counts(df, partition_col, value)
-
-
 def _cdf_grid(cnt: DataFrame) -> DataFrame:
-    """Shared ECDF scaffolding for the two-cohort statistics (KS, EMD):
-    from the (p, v, c) sketch, the full partition × value grid with
-    running counts → (p, np, n_total, v, cum_c, cum_t, next_v).
-    cum_c/np is the partition's ECDF at v; (cum_t-cum_c)/(n_total-np)
-    the complement's; next_v the following grid point (NULL at the
-    end). Aggregates only — every relation here is tiny."""
+    """Shared ECDF scaffolding for the two-cohort statistics (KS, PSI,
+    EMD): from the (p, v, c) sketch, the full partition × value grid with
+    running counts → (p, np, n_total, v, c, ct, cum_c, cum_t, next_v).
+    c/ct are the partition's and the whole table's count at v (c is 0
+    where the partition lacks v); cum_c/np is the partition's ECDF at v;
+    (cum_t-cum_c)/(n_total-np) the complement's; next_v the following
+    grid point (NULL at the end). Aggregates only — every relation here
+    is tiny."""
     parts = cnt.groupBy("p").agg(F.sum("c").alias("np"))
     tot = cnt.groupBy("v").agg(F.sum("c").alias("ct"))
     n_total = parts.agg(F.sum("np").alias("n_total"))
@@ -72,6 +80,8 @@ def _cdf_grid(cnt: DataFrame) -> DataFrame:
         "np",
         "n_total",
         "v",
+        "c",
+        "ct",
         F.sum("c").over(w).alias("cum_c"),
         F.sum("ct").over(w).alias("cum_t"),
         F.lead("v").over(w).alias("next_v"),
@@ -93,34 +103,68 @@ def _complement_gap() -> Column:
     )
 
 
-def ks_by_partition(
-    df: DataFrame,
-    partition_col: str,
-    value: Column,
-    n_terms: int = 3,
-    precomputed: DataFrame | None = None,
-) -> DataFrame:
+def drift_by_partition(sketch: DataFrame, partition_col: str) -> DataFrame:
+    """KS max-gap and PSI of each partition vs its complement, both from
+    the one ``_cdf_grid`` value grid → (partition_col, n_part, n_rest,
+    ks_d, psi).
+
+    The grid rows aggregate to PSI buckets: per (p, bucket) the sums of
+    c/ct and the max ECDF gap. ks_d is the max of the bucket maxima.
+    n_b (observed bucket count) is a count window over p — exact because
+    the grid is the full partitions × values product, so every partition
+    carries every observed bucket.
+
+    psi = sum_b (pa_b - pb_b) * ln(pa_b / pb_b)
+    pa = (c_part + eps) / (n_part + eps * n_b), bucket = min(floor(v /
+    PSI_BUCKET_WIDTH), PSI_BUCKETS - 1). Bucketing happens on the sketch,
+    i.e. AFTER its null filter — bucketing the raw value directly would
+    misroute nulls because Spark's ``least`` ignores null arguments
+    (least(NULL, 19) = 19). Degenerate inputs (a single partition — no
+    complement) yield NULL ks_d.
+    """
+    b = F.least(
+        F.floor(F.col("v") / F.lit(PSI_BUCKET_WIDTH)), F.lit(PSI_BUCKETS - 1)
+    )
+    buckets = (
+        _cdf_grid(sketch)
+        .groupBy("p", "np", "n_total", b.alias("b"))
+        .agg(
+            F.sum("c").alias("c"),
+            F.sum("ct").alias("ct"),
+            F.max(_complement_gap()).alias("gap"),
+        )
+        .withColumn("n_b", F.count(F.lit(1)).over(Window.partitionBy("p")))
+    )
+    eps = F.lit(PSI_EPS)
+    nb = F.col("n_total") - F.col("np")
+    pa = (F.col("c") + eps) / (F.col("np") + eps * F.col("n_b"))
+    pb = (F.col("ct") - F.col("c") + eps) / (nb + eps * F.col("n_b"))
+    return buckets.groupBy("p", "np", "n_total").agg(
+        F.max("gap").alias("ks_d"),
+        F.sum((pa - pb) * F.log(pa / pb)).alias("psi"),
+    ).select(
+        F.col("p").alias(partition_col),
+        F.col("np").alias("n_part"),
+        (F.col("n_total") - F.col("np")).alias("n_rest"),
+        "ks_d",
+        "psi",
+    )
+
+
+def ks_by_partition(sketch: DataFrame, partition_col: str) -> DataFrame:
     """Two-sample KS statistic of each partition vs its complement.
 
     Output: (partition_col, n_part, n_rest, ks_d, ks_p) where ks_p is the
-    asymptotic two-sided Smirnov p-value (first ``n_terms`` series terms,
+    asymptotic two-sided Smirnov p-value (first KS_TERMS series terms,
     lambda = sqrt(ne)*D, ne = n1*n2/(n1+n2)), clamped to [0, 1].
-    ``precomputed`` lets callers share one (p, v, c) counts sketch across
-    several drift statistics (one table scan total). Degenerate inputs
-    (a single partition — no complement) yield NULL ks_d/ks_p.
+    Degenerate inputs (a single partition — no complement) yield NULL
+    ks_d/ks_p.
     """
-    cnt = precomputed if precomputed is not None else _counts(df, partition_col, value)
-    cum = _cdf_grid(cnt)
-    gap = _complement_gap()
-    ks = cum.groupBy("p").agg(
-        F.first("np").alias("n_part"),
-        (F.first("n_total") - F.first("np")).alias("n_rest"),
-        F.max(gap).alias("ks_d"),
-    )
+    ks = drift_by_partition(sketch, partition_col)
     ne = F.col("n_part") * F.col("n_rest") / (F.col("n_part") + F.col("n_rest"))
     lam2 = ne * F.col("ks_d") * F.col("ks_d")
     series = None
-    for k in range(1, n_terms + 1):
+    for k in range(1, KS_TERMS + 1):
         term = F.lit(float((-1) ** (k - 1))) * F.exp(F.lit(-2.0 * k * k) * lam2)
         series = term if series is None else series + term
     # explicit NULL gate: greatest/least IGNORE null args in Spark, so a
@@ -129,67 +173,18 @@ def ks_by_partition(
         F.col("ks_d").isNotNull(),
         F.least(F.lit(1.0), F.greatest(F.lit(0.0), F.lit(2.0) * series)),
     )
-    return ks.select(
-        F.col("p").alias(partition_col), "n_part", "n_rest", "ks_d", p.alias("ks_p")
+    return ks.select(partition_col, "n_part", "n_rest", "ks_d", p.alias("ks_p"))
+
+
+def psi_by_partition(sketch: DataFrame, partition_col: str) -> DataFrame:
+    """Population Stability Index of each partition vs its complement
+    (see ``drift_by_partition``) → (partition_col, n_part, psi)."""
+    return drift_by_partition(sketch, partition_col).select(
+        partition_col, "n_part", "psi"
     )
 
 
-def psi_by_partition(
-    df: DataFrame,
-    partition_col: str,
-    value: Column,
-    bucket_width: float = 50.0,
-    n_buckets: int = 20,
-    eps: float = 0.5,
-    precomputed: DataFrame | None = None,
-) -> DataFrame:
-    """Population Stability Index of each partition vs its complement over
-    fixed-width buckets of ``value`` (capped at ``n_buckets``), with
-    add-``eps`` smoothing so empty buckets stay finite.
-
-    psi = sum_b (pa_b - pb_b) * ln(pa_b / pb_b)
-    pa = (c_part + eps) / (n_part + eps * B),  B = observed bucket count.
-    ``precomputed``: a raw-value counts sketch (p, v, c) — re-bucketed here
-    by aggregate arithmetic, no second table scan.
-
-    Bucketing happens AFTER the null filter in ``_counts`` — bucketing the
-    raw value directly would misroute nulls because Spark's ``least``
-    ignores null arguments (least(NULL, 19) = 19).
-    """
-    raw = precomputed if precomputed is not None else _counts(df, partition_col, value)
-    b = F.least(F.floor(F.col("v") / F.lit(bucket_width)), F.lit(n_buckets - 1))
-    cnt = raw.groupBy("p", b.alias("v")).agg(F.sum("c").alias("c"))
-    parts = cnt.groupBy("p").agg(F.sum("c").alias("np"))
-    totb = cnt.groupBy("v").agg(F.sum("c").alias("ct"))
-    scalars = cnt.agg(
-        F.sum("c").alias("n_total"), F.count_distinct("v").alias("n_b")
-    )
-
-    grid = parts.crossJoin(totb.select("v"))
-    j = (
-        grid.join(cnt, on=["p", "v"], how="left")
-        .fillna(0, subset=["c"])
-        .join(totb, on="v")
-        .crossJoin(F.broadcast(scalars))
-    )
-    na = F.col("np")
-    nb = F.col("n_total") - F.col("np")
-    pa = (F.col("c") + F.lit(eps)) / (na + F.lit(eps) * F.col("n_b"))
-    pb = (F.col("ct") - F.col("c") + F.lit(eps)) / (nb + F.lit(eps) * F.col("n_b"))
-    contrib = (pa - pb) * F.log(pa / pb)
-    return (
-        j.groupBy("p")
-        .agg(F.first("np").alias("n_part"), F.sum(contrib).alias("psi"))
-        .select(F.col("p").alias(partition_col), "n_part", "psi")
-    )
-
-
-def emd_by_partition(
-    df: DataFrame,
-    partition_col: str,
-    value: Column,
-    precomputed: DataFrame | None = None,
-) -> DataFrame:
+def emd_by_partition(sketch: DataFrame, partition_col: str) -> DataFrame:
     """Earth-mover (Wasserstein-1) distance of each partition's value
     distribution vs its complement, over the observed value grid:
 
@@ -199,12 +194,11 @@ def emd_by_partition(
     change however thin, EMD weighs how much mass moved how far (in
     value units), so the two together separate "a spike appeared" from
     "the whole distribution shifted". Same aggregates-only shape as
-    ks_by_partition (shares its (p, v, c) sketch via ``precomputed`` and
-    the _cdf_grid scaffolding in code); output (partition_col, n_part,
-    n_rest, emd), NULL emd for degenerate (single-partition) inputs.
+    ks_by_partition (same (p, v, c) sketch, same _cdf_grid); output
+    (partition_col, n_part, n_rest, emd), NULL emd for degenerate
+    (single-partition) inputs.
     """
-    cnt = precomputed if precomputed is not None else _counts(df, partition_col, value)
-    cum = _cdf_grid(cnt)
+    cum = _cdf_grid(sketch)
     # the last grid point has no width (lead is NULL) → contributes 0;
     # a NULL gap (empty complement) nulls the whole sum via plain `+`
     area = F.coalesce(
@@ -222,23 +216,16 @@ def emd_by_partition(
     )
 
 
-def entropy_by_partition(
-    df: DataFrame,
-    partition_col: str,
-    value: Column,
-    precomputed: DataFrame | None = None,
-) -> DataFrame:
+def entropy_by_partition(sketch: DataFrame, partition_col: str) -> DataFrame:
     """Shannon entropy (nats) of the value distribution within each
     partition → (partition_col, n_part, n_values, entropy). A collapsing
     domain (template takeover, a stuck producer) shows up as an entropy
     drop before any referential or drift check fires. Aggregates only:
-    the (p, v, c) sketch is the sole input (shareable via
-    ``precomputed``)."""
-    cnt = precomputed if precomputed is not None else _counts(df, partition_col, value)
-    parts = cnt.groupBy("p").agg(
+    the (p, v, c) sketch is the sole input."""
+    parts = sketch.groupBy("p").agg(
         F.sum("c").alias("np"), F.count(F.lit(1)).alias("n_values")
     )
-    j = cnt.join(parts, "p")
+    j = sketch.join(parts, "p")
     frac = F.col("c") / F.col("np")
     return (
         j.groupBy("p")

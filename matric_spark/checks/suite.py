@@ -22,13 +22,20 @@ only two read the wide text column:
             shuffles here. Standalone duplicate_row_counts (hash-first,
             8-byte shuffle) remains the right shape when uniqueness runs
             alone; inside the suite the window exchange is already paid.
-  1 scan  — drift value-counts, PERSISTED: KS and PSI consume the
-            (p, v, c) sketch through ~6 sub-relations (ECDF grid,
-            re-bucketing), and exchange-reuse does NOT deduplicate them
-            (column pruning canonicalizes the branches differently —
-            measured), so an unpersisted sketch re-scans the table once
-            per consumer. Persisting pins the fan-out to the sketch,
-            whose size is |partitions| x |distinct values|, not |rows|.
+  1 scan  — drift value-counts, PERSISTED: KS and PSI both come out of
+            checks/drift.drift_by_partition — one ECDF value grid over
+            the (p, v, c) sketch, aggregated to PSI buckets — which
+            reads the sketch three times (partition totals, value
+            totals, the grid join). Exchange reuse does NOT deduplicate
+            those reads (column pruning canonicalizes the branches
+            differently — measured), so an unpersisted sketch re-scans
+            the table once per read. Persisting pins the fan-out to the
+            sketch, whose size is |partitions| x |distinct values|, not
+            |rows|.
+The verdict rows themselves come from ONE builder, core_verdicts, over
+(per-partition check metrics, drift sketch) — the batch suite, the
+resumable state path (state.assemble_verdicts) and the streaming path
+all call it, so thresholds and check ids exist once.
 Violation ROWS are materialized lazily on demand (separate filters that
 each push down to the scan), optionally capped.
 """
@@ -40,7 +47,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from matric_spark.checks.drift import ks_by_partition, psi_by_partition, _counts
+from matric_spark.checks.drift import counts_sketch, drift_by_partition
 from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import out_of_order_turns
 from matric_spark.checks.uniqueness import uniqueness_violations
@@ -130,7 +137,8 @@ def conv_keyed_metrics(df: DataFrame, cfg: SuiteConfig) -> DataFrame:
 def run_verdicts(df: DataFrame, cfg: SuiteConfig | None = None) -> DataFrame:
     """The flagship query: per-(partition, check) verdict table
     (part, check_id, metric, status), every partition present for every
-    check, 'fail' iff the check's threshold is exceeded.
+    check, 'fail' iff the check's threshold is exceeded — the three
+    scans of the module docstring feeding core_verdicts.
 
     Cache lifecycle is CALLER-OWNED: the drift sketch below is
     persist()ed and consumed lazily by the returned plan, so it cannot
@@ -139,53 +147,60 @@ def run_verdicts(df: DataFrame, cfg: SuiteConfig | None = None) -> DataFrame:
     (spark.catalog.clearCache(), as bench.py / tools/check_oracle.py /
     tools/scaling_bench.py all do) or the storage pool accumulates one
     sketch per invocation."""
-    cfg = cfg or SuiteConfig()
-    p = cfg.partition_col
-
-    scalar = scalar_check_metrics(df, cfg)
-
-    # sequence + uniqueness: one conv-keyed exchange (module docstring)
-    convm = conv_keyed_metrics(df, cfg)
-
-    # drift: ONE persisted counts sketch feeds both KS and PSI — the
-    # persist is load-bearing: the ECDF/re-bucket consumers otherwise
-    # each re-derive the sketch from a fresh table scan (exchange reuse
-    # does not fire across their differently-pruned branches)
     from pyspark import StorageLevel
 
-    counts = _counts(df, p, F.length("text")).persist(
+    cfg = cfg or SuiteConfig()
+    # sequence + uniqueness: one conv-keyed exchange (module docstring)
+    metrics = scalar_check_metrics(df, cfg).join(
+        conv_keyed_metrics(df, cfg), "part", "left"
+    )
+    # the persist is load-bearing: the drift grid reads the sketch three
+    # times, and each read would otherwise re-scan the table
+    sketch = counts_sketch(df, cfg.partition_col, F.length("text")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    ks = ks_by_partition(df, p, F.length("text"), precomputed=counts).select(
-        F.col(p).alias("part"), "ks_d"
+    return core_verdicts(metrics, sketch, cfg)
+
+
+def core_verdicts(metrics: DataFrame, sketch: DataFrame, cfg: SuiteConfig) -> DataFrame:
+    """The eight core verdicts from per-partition check metrics (part,
+    ref_role, ref_tool, null_text, null_ts, uniqueness, seq_order — each
+    a violation count, fail iff > 0) and the drift (p, v, c) sketch: KS
+    and PSI come out of one drift_by_partition relation over the sketch.
+    A partition missing from the uniqueness/sequence metrics has no
+    violations there (0)."""
+    drift = drift_by_partition(sketch, "part").select("part", "ks_d", "psi")
+    wide = metrics.join(drift, "part", "left").fillna(
+        0, subset=["uniqueness", "seq_order"]
     )
-    psi = psi_by_partition(df, p, F.length("text"), precomputed=counts).select(
-        F.col(p).alias("part"), "psi"
+    counts = ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]
+    checks = {c: (F.col(c), F.col(c) > 0) for c in counts}
+    checks["drift_ks"] = (F.col("ks_d"), F.col("ks_d") > cfg.ks_threshold)
+    checks["drift_psi"] = (F.col("psi"), F.col("psi") > cfg.psi_threshold)
+    return verdict_rows(wide, checks)
+
+
+def verdict_rows(wide: DataFrame, checks: dict[str, tuple[Column, Column]]) -> DataFrame:
+    """Unpivot a per-partition wide table into verdict rows
+    (part, check_id, metric, status): ``checks`` maps each check_id to
+    its (metric, fail_when) columns over ``wide``; status is 'fail' iff
+    fail_when is true (a NULL fail_when passes).
+
+    ONE projection, then unpivot: a per-check union-of-selects would
+    re-evaluate the whole `wide` subplan once per branch; unpivot
+    evaluates it exactly once."""
+    packed = wide.select(
+        "part",
+        *[
+            F.struct(
+                metric.cast("double").alias("m"),
+                F.when(fail_when, F.lit("fail")).otherwise(F.lit("pass")).alias("s"),
+            ).alias(check_id)
+            for check_id, (metric, fail_when) in checks.items()
+        ],
     )
-
-    wide = (
-        scalar.join(convm, "part", "left")
-        .join(ks, "part", "left")
-        .join(psi, "part", "left")
-        .fillna(0, subset=["uniqueness", "seq_order"])
-    )
-
-    # Unpivot wide -> long with ONE projection. A per-check
-    # union-of-selects would re-evaluate the whole `wide` subplan once per
-    # branch (8 full suite computations); unpivot evaluates it exactly once.
-    def entry(metric: Column, fail_when: Column) -> Column:
-        status = F.when(fail_when, F.lit("fail")).otherwise(F.lit("pass"))
-        return F.struct(metric.cast("double").alias("m"), status.alias("s"))
-
-    structs: dict[str, Column] = {}
-    for chk in ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]:
-        structs[chk] = entry(F.col(chk), F.col(chk) > 0)
-    structs["drift_ks"] = entry(F.col("ks_d"), F.col("ks_d") > cfg.ks_threshold)
-    structs["drift_psi"] = entry(F.col("psi"), F.col("psi") > cfg.psi_threshold)
-
-    packed = wide.select("part", *[c.alias(name) for name, c in structs.items()])
     return packed.unpivot(
-        ids=["part"], values=list(structs), variableColumnName="check_id", valueColumnName="ms"
+        ids=["part"], values=list(checks), variableColumnName="check_id", valueColumnName="ms"
     ).select("part", "check_id", F.col("ms.m").alias("metric"), F.col("ms.s").alias("status"))
 
 
@@ -275,46 +290,18 @@ def extended_partition_metrics(
 def _extended_rows(
     wide: DataFrame, rules, volume_abs_delta: float
 ) -> DataFrame:
-    """Unpivot the extended families' wide metrics (part, rule_<name>...,
-    fd_conflict, delta_pct, gap_months) into verdict rows — SHARED by
+    """Verdict rows of the extended families' wide metrics (part,
+    rule_<name>..., fd_conflict, delta_pct, gap_months) — SHARED by
     the batch path (run_verdicts_extended) and the resumable path
-    (state.assemble_verdicts_extended) so the two emissions can never
+    (state.run_incremental extended=True) so the two emissions can never
     diverge in check ids, thresholds, or status logic."""
-    structs: dict[str, Column] = {}
-    for r in rules:
-        c = F.col(f"rule_{r.name}")
-        structs[f"rule_{r.name}"] = F.struct(
-            c.cast("double").alias("m"),
-            F.when(c > 0, F.lit("fail")).otherwise(F.lit("pass")).alias("s"),
-        )
-    structs["fd_conflict"] = F.struct(
-        F.col("fd_conflict").cast("double").alias("m"),
-        F.when(F.col("fd_conflict") > 0, F.lit("fail"))
-        .otherwise(F.lit("pass"))
-        .alias("s"),
+    counts = [f"rule_{r.name}" for r in rules] + ["fd_conflict"]
+    checks = {c: (F.col(c), F.col(c) > 0) for c in counts}
+    checks["volume_delta"] = (
+        F.col("delta_pct"),
+        (F.abs(F.col("delta_pct")) > volume_abs_delta) | (F.col("gap_months") > 0),
     )
-    structs["volume_delta"] = F.struct(
-        F.col("delta_pct").cast("double").alias("m"),
-        F.when(
-            (F.abs(F.col("delta_pct")) > volume_abs_delta)
-            | (F.col("gap_months") > 0),
-            F.lit("fail"),
-        )
-        .otherwise(F.lit("pass"))
-        .alias("s"),
-    )
-    packed = wide.select("part", *[c.alias(n) for n, c in structs.items()])
-    return packed.unpivot(
-        ids=["part"],
-        values=list(structs),
-        variableColumnName="check_id",
-        valueColumnName="ms",
-    ).select(
-        "part",
-        "check_id",
-        F.col("ms.m").alias("metric"),
-        F.col("ms.s").alias("status"),
-    )
+    return verdict_rows(wide, checks)
 
 
 def run_violations(df: DataFrame, cfg: SuiteConfig | None = None) -> dict[str, DataFrame]:

@@ -9,7 +9,7 @@ BASELINE.json ``input_hint``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,14 +55,6 @@ def get_annotation(df: DataFrame, prefix: str = "Metadata_") -> DataFrame:
     return df.withColumn("id", F.row_number().over(w)).select("id", *meta)
 
 
-def with_row_id(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
-    """Attach a deterministic 1-based ``id`` ordered by ``order_cols``
-    (defaults to every column). Used to emulate matric's positional ids."""
-    cols = order_cols or df.columns
-    w = Window.orderBy(*[F.col(c) for c in cols])
-    return df.withColumn("id", F.row_number().over(w))
-
-
 def drop_annotation(df: DataFrame, prefix: str = "Metadata_") -> DataFrame:
     """Complement projection → feature columns (R/utils.R:68-73)."""
     return df.drop(*annotation_cols(df, prefix))
@@ -89,12 +81,3 @@ def preprocess_data(
     ).first()
     dropped = [c for c in feats if (counts[c] or 0) > 0]
     return df.drop(*dropped), dropped
-
-
-def composite_key(cols: list[str], sep: str = ":") -> Column:
-    """matric's ``tidyr::unite`` composite key (R/sim_filter.R:174-177).
-
-    Null-safe: nulls become a sentinel so two rows null in the same
-    column still compare equal (R's ``unite`` keeps "NA" as text).
-    """
-    return F.concat_ws(sep, *[F.coalesce(F.col(c).cast("string"), F.lit("\x00NA")) for c in cols])

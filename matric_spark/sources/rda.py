@@ -299,14 +299,6 @@ def read_rda(path: str) -> dict[str, Any]:
     return out
 
 
-def read_rds(path: str) -> Any:
-    """Decode a .rds (saveRDS()) file into a Python value."""
-    with _open_maybe_compressed(path) as fh:
-        r = _Reader(fh)
-        r.header()
-        return r.item()
-
-
 # ---- data-frame conversion ----
 
 

@@ -46,9 +46,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from matric_spark.checks.drift import ks_by_partition, psi_by_partition, _counts
+from matric_spark.checks.drift import counts_sketch
 from matric_spark.checks.sequence import out_of_order_turns
-from matric_spark.checks.suite import SuiteConfig, scalar_check_metrics
+from matric_spark.checks.suite import SuiteConfig, core_verdicts, scalar_check_metrics
 
 _LOG_SCHEMA = "part int, run_id string, n_rows long, fingerprint string"
 
@@ -330,7 +330,7 @@ def run_incremental(
         store._append(key_index, "key_index", fingerprint)
 
         # drift sketch: per-partition value counts (same run_id contract)
-        sketch = _counts(remaining, p, F.length("text")).withColumn(
+        sketch = counts_sketch(remaining, p, F.length("text")).withColumn(
             "run_id", F.lit(run_id)
         )
         store._append(sketch, "sketch", fingerprint)
@@ -359,35 +359,41 @@ def run_incremental(
         )
         store._append(log, "log", fingerprint)
 
-    if extended:
-        return assemble_verdicts_extended(spark, store, fingerprint, cfg)
-    return assemble_verdicts(spark, store, fingerprint, cfg)
-
-
-def assemble_verdicts(
-    spark: SparkSession,
-    store: StateStore,
-    fingerprint: str,
-    cfg: SuiteConfig,
-) -> DataFrame:
-    """Full verdict table from state only — no data re-scan.
-
-    Global checks: uniqueness folds the key index (keys duplicated
-    ANYWHERE → per-partition participating-row counts); KS/PSI run on
-    the merged sketch via the same code path as the batch suite."""
-    from pyspark.sql import Column
-
-    local = store._for("local", fingerprint)
-    assert local is not None, "no completed partitions in state"
-    local = local.dropDuplicates(["part"]).drop("run_id")
-
     # batch/resume semantics: appends are WHOLE partitions, so rows
     # repeated under a different run_id (crash between state append and
     # log append, then re-run) are exact duplicates — dedup on the
-    # natural key. Streaming overrides these accessors with per-batch
-    # folds (streaming/validate.stream_verdicts) because there the same
+    # natural key. Streaming passes per-batch folds instead
+    # (streaming/validate.stream_verdicts) because there the same
     # natural key across run_ids is NEW data, not a replay.
-    key_index = store.key_index_for(fingerprint, cfg)
+    local = store._for("local", fingerprint)
+    assert local is not None, "no completed partitions in state"
+    core = assemble_verdicts(
+        local.dropDuplicates(["part"]).drop("run_id"),
+        store.key_index_for(fingerprint, cfg),
+        store.sketch_for(fingerprint),
+        cfg,
+    )
+    if extended:
+        return assemble_verdicts_extended(core, store, fingerprint)
+    return core
+
+
+def assemble_verdicts(
+    local: DataFrame,
+    key_index: DataFrame,
+    sketch: DataFrame,
+    cfg: SuiteConfig,
+) -> DataFrame:
+    """Full verdict table from state relations only — no data re-scan.
+
+    Inputs, already deduped or folded by the caller: ``local`` has one
+    row of partition-local metrics per partition (part, ref_role,
+    ref_tool, null_text, null_ts, seq_order), ``key_index`` the
+    per-partition key counts (*cfg.key, part, cnt), ``sketch`` the drift
+    (p, v, c) counts. Uniqueness is global: it folds the key index (keys
+    duplicated ANYWHERE → per-partition participating-row counts). KS,
+    PSI and the verdict rows come from checks/suite.core_verdicts, the
+    batch suite's own builder."""
     glob = key_index.groupBy(*cfg.key).agg(F.sum("cnt").alias("_g"))
     dup_keys = glob.filter(F.col("_g") > 1).select(*cfg.key)
     uniq = (
@@ -395,55 +401,18 @@ def assemble_verdicts(
         .groupBy("part")
         .agg(F.sum("cnt").alias("uniqueness"))
     )
-
-    sketch = store.sketch_for(fingerprint)
-    ks = ks_by_partition(None, "part", None, precomputed=sketch).select(
-        "part", "ks_d"
-    )
-    psi = psi_by_partition(None, "part", None, precomputed=sketch).select(
-        "part", "psi"
-    )
-
-    wide = (
-        local.join(uniq, "part", "left")
-        .join(ks, "part", "left")
-        .join(psi, "part", "left")
-        .fillna(0, subset=["uniqueness"])
-    )
-
-    def entry(metric: Column, fail_when: Column) -> Column:
-        status = F.when(fail_when, F.lit("fail")).otherwise(F.lit("pass"))
-        return F.struct(metric.cast("double").alias("m"), status.alias("s"))
-
-    structs: dict[str, Column] = {}
-    for chk in ["ref_role", "ref_tool", "null_text", "null_ts", "uniqueness", "seq_order"]:
-        structs[chk] = entry(F.col(chk), F.col(chk) > 0)
-    structs["drift_ks"] = entry(F.col("ks_d"), F.col("ks_d") > cfg.ks_threshold)
-    structs["drift_psi"] = entry(F.col("psi"), F.col("psi") > cfg.psi_threshold)
-
-    packed = wide.select("part", *[c.alias(n) for n, c in structs.items()])
-    return packed.unpivot(
-        ids=["part"],
-        values=list(structs),
-        variableColumnName="check_id",
-        valueColumnName="ms",
-    ).select(
-        "part",
-        "check_id",
-        F.col("ms.m").alias("metric"),
-        F.col("ms.s").alias("status"),
-    )
+    return core_verdicts(local.join(uniq, "part", "left"), sketch, cfg)
 
 
 def assemble_verdicts_extended(
-    spark: SparkSession,
+    core: DataFrame,
     store: StateStore,
     fingerprint: str,
-    cfg: SuiteConfig,
     volume_abs_delta: float = 0.5,
 ) -> DataFrame:
     """Extended verdict table from state only — the resumable emission of
-    checks/suite.run_verdicts_extended.
+    checks/suite.run_verdicts_extended: the ``core`` verdicts plus the
+    extended families' rows.
 
     Rule/FD metrics come from the per-partition `local_ext` appends
     (whole-partition replays deduped on part, like `local`); the volume
@@ -455,8 +424,6 @@ def assemble_verdicts_extended(
     from matric_spark.checks.column_stats import volume_profile
     from matric_spark.checks.constraints import default_transcript_rules
     from matric_spark.checks.suite import _extended_rows
-
-    core = assemble_verdicts(spark, store, fingerprint, cfg)
 
     ext = store._for("local_ext", fingerprint)
     if ext is None:

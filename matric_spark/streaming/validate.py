@@ -103,8 +103,9 @@ def validated_stream(
         them exactly like the batch path),
       - drift counts sketch rows,
     into the SAME StateStore layout as `state.run_incremental`; final
-    verdicts come from `state.assemble_verdicts`, so streaming ingestion
-    and batch backfill are interchangeable (differential-tested).
+    verdicts come from `stream_verdicts`, which feeds the same
+    `state.assemble_verdicts` as the batch resume path, so streaming
+    ingestion and batch backfill are interchangeable (differential-tested).
     Exactly-once: foreachBatch may retry a batch; ALL appends (local,
     key index, sketch, log) carry the batch id in `run_id`, and
     `stream_verdicts` dedups on (run_id, natural key) before summing —
@@ -114,7 +115,7 @@ def validated_stream(
     cfg = cfg or SuiteConfig()
     p = cfg.partition_col
 
-    from matric_spark.checks.drift import _counts
+    from matric_spark.checks.drift import counts_sketch
     from matric_spark.checks.sequence import out_of_order_turns
     from matric_spark.checks.suite import scalar_check_metrics
     from matric_spark.state import StateStore
@@ -169,7 +170,7 @@ def validated_stream(
         )
         store._append(key_index.coalesce(4), "key_index", fingerprint)
 
-        sketch = _counts(batch, p, F.length("text")).withColumn(
+        sketch = counts_sketch(batch, p, F.length("text")).withColumn(
             "run_id", F.lit(run_id)
         )
         store._append(sketch.coalesce(1), "sketch", fingerprint)
@@ -196,7 +197,9 @@ def stream_verdicts(
     fingerprint: str = "stream",
     cfg: SuiteConfig | None = None,
 ) -> DataFrame:
-    """Assemble the verdict table from streaming-appended state.
+    """Assemble the verdict table from streaming-appended state: the
+    per-batch folds below go straight into `state.assemble_verdicts`,
+    the assembler the batch resume path uses.
 
     NOTE on semantics vs batch: micro-batches may split one data
     partition across appends, so EVERY state relation is folded per
@@ -241,21 +244,7 @@ def stream_verdicts(
         .groupBy("p", "v")
         .agg(F.sum("c").alias("c"))
     )
-
-    class _FoldedStore(StateStore):
-        def _for(self, name: str, fp: str, schema: str | None = None):
-            if name == "local":
-                return folded
-            return StateStore._for(self, name, fp, schema)
-
-        def key_index_for(self, fp: str, _cfg):
-            return key_folded
-
-        def sketch_for(self, fp: str):
-            return sketch_folded
-
-    fs = _FoldedStore(spark, state_dir)
-    return assemble_verdicts(spark, fs, fingerprint, cfg)
+    return assemble_verdicts(folded, key_folded, sketch_folded, cfg)
 
 
 def rule_violation_stream(stream: DataFrame, rules=None, id_cols=None) -> DataFrame:

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from matric_spark.checks.column_stats import column_stats
-from matric_spark.checks.drift import ks_by_partition, psi_by_partition, _counts
+from matric_spark.checks.drift import counts_sketch, ks_by_partition, psi_by_partition
 from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import conversation_shape, out_of_order_turns, text_parity
 from matric_spark.checks.suite import SuiteConfig, run_verdicts
@@ -112,7 +112,8 @@ def test_ks_two_identical_cohorts(spark):
     # identical length distributions in both partitions -> D = 0
     rows = [(p, "x" * (i % 5 + 1)) for p in (1, 2) for i in range(50)]
     df = spark.createDataFrame(rows, "part int, text string")
-    out = ks_by_partition(df, "part", F.length("text")).collect()
+    sk = counts_sketch(df, "part", F.length("text"))
+    out = ks_by_partition(sk, "part").collect()
     assert all(r["ks_d"] == pytest.approx(0.0) for r in out)
     assert all(r["ks_p"] == pytest.approx(1.0) for r in out)
 
@@ -121,7 +122,8 @@ def test_ks_disjoint_cohorts(spark):
     # completely disjoint supports -> D = 1
     rows = [(1, "x" * 2)] * 30 + [(2, "x" * 50)] * 30
     df = spark.createDataFrame(rows, "part int, text string")
-    out = {r["part"]: r for r in ks_by_partition(df, "part", F.length("text")).collect()}
+    sk = counts_sketch(df, "part", F.length("text"))
+    out = {r["part"]: r for r in ks_by_partition(sk, "part").collect()}
     assert out[1]["ks_d"] == pytest.approx(1.0)
     assert out[2]["ks_d"] == pytest.approx(1.0)
     assert out[1]["ks_p"] < 1e-6
@@ -130,16 +132,72 @@ def test_ks_disjoint_cohorts(spark):
 def test_psi_identical_is_zero(spark):
     rows = [(p, "x" * (60 * (i % 4))) for p in (1, 2) for i in range(40)]
     df = spark.createDataFrame(rows, "part int, text string")
-    out = psi_by_partition(df, "part", F.length("text")).collect()
+    out = psi_by_partition(counts_sketch(df, "part", F.length("text")), "part").collect()
     assert all(abs(r["psi"]) < 1e-12 for r in out)
 
 
 def test_psi_precomputed_equals_standalone(tiny_transcripts):
-    cnt = _counts(tiny_transcripts, "part_month", F.length("text"))
-    a = sorted(map(tuple, psi_by_partition(tiny_transcripts, "part_month", F.length("text")).collect()))
-    b = sorted(map(tuple, psi_by_partition(
-        tiny_transcripts, "part_month", F.length("text"), precomputed=cnt).collect()))
+    """PSI off a persisted sketch (as run_verdicts fans it out) equals
+    PSI off the in-plan sketch and a standalone pure-Python PSI over the
+    raw text lengths."""
+    import math
+
+    from matric_spark.checks.drift import PSI_BUCKET_WIDTH, PSI_BUCKETS, PSI_EPS
+
+    cnt = counts_sketch(tiny_transcripts, "part_month", F.length("text")).persist()
+    try:
+        a = sorted(map(tuple, psi_by_partition(
+            counts_sketch(tiny_transcripts, "part_month", F.length("text")), "part_month").collect()))
+        b = sorted(map(tuple, psi_by_partition(cnt, "part_month").collect()))
+    finally:
+        cnt.unpersist()
     assert a == pytest.approx(b)
+
+    lengths = {}
+    for r in tiny_transcripts.select("part_month", F.length("text").alias("n")).collect():
+        if r.n is not None:
+            bucket = min(int(r.n // PSI_BUCKET_WIDTH), PSI_BUCKETS - 1)
+            lengths.setdefault(r.part_month, []).append(bucket)
+    buckets = sorted({x for bs in lengths.values() for x in bs})
+    k = len(buckets)
+    for part, psi in ((row[0], row[-1]) for row in b):
+        own = [lengths[part].count(x) for x in buckets]
+        rest = [sum(bs.count(x) for q, bs in lengths.items() if q != part) for x in buckets]
+        pa = [(x + PSI_EPS) / (sum(own) + PSI_EPS * k) for x in own]
+        pb = [(y + PSI_EPS) / (sum(rest) + PSI_EPS * k) for y in rest]
+        assert psi == pytest.approx(sum((x - y) * math.log(x / y) for x, y in zip(pa, pb)), abs=1e-12)
+
+
+def test_psi_closed_form(spark):
+    """Hand-computed PSI over 3 buckets: A has an empty bucket (eps
+    smoothing keeps it finite), and 1000 and 5000 both land in the capped
+    last bucket (floor(v/50) capped at 19) — uncapped they would be 2
+    buckets and n_b would be 4, not 3."""
+    import math
+
+    from matric_spark.checks.drift import drift_by_partition
+
+    vals = {"A": [10, 10, 20, 1000], "B": [10, 60, 60, 5000, 5000]}
+    df = spark.createDataFrame(
+        [(p, v) for p, vs in vals.items() for v in vs], "p string, v int"
+    )
+    # per-bucket counts over (b0: v<50, b1: 50<=v<100, b19: capped)
+    counts = {"A": [3, 0, 1], "B": [1, 2, 2]}
+
+    def psi(ca, cb):
+        na, nb, k = sum(ca), sum(cb), len(ca)
+        pa = [(x + 0.5) / (na + 0.5 * k) for x in ca]
+        pb = [(y + 0.5) / (nb + 0.5 * k) for y in cb]
+        return sum((a - b) * math.log(a / b) for a, b in zip(pa, pb))
+
+    out = {r.p: r for r in drift_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()}
+    assert out["A"].psi == pytest.approx(psi(counts["A"], counts["B"]), abs=1e-12)
+    assert out["B"].psi == pytest.approx(psi(counts["B"], counts["A"]), abs=1e-12)
+    assert out["A"].psi > 0.5
+    # ECDFs over the raw values 10, 20, 60, 1000, 5000: the max gap is
+    # at v=20, |3/4 - 1/5|
+    assert out["A"].ks_d == pytest.approx(0.55, abs=1e-12)
+    assert (out["A"].n_part, out["A"].n_rest) == (4, 5)
 
 
 def test_verdicts(tiny_transcripts):
@@ -360,7 +418,7 @@ def test_emd_by_partition_closed_form(spark):
 
     rows = [("A", 0), ("A", 0), ("B", 1), ("B", 1)]
     df = spark.createDataFrame(rows, "p string, v int")
-    out = {r.p: r for r in emd_by_partition(df, "p", F.col("v")).collect()}
+    out = {r.p: r for r in emd_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()}
     assert out["A"].emd == 1.0 and out["B"].emd == 1.0
     assert out["A"].n_part == 2 and out["A"].n_rest == 2
 
@@ -377,10 +435,10 @@ def test_emd_vs_ks_sensitivity(spark):
     far = spark.createDataFrame(
         [("A", 0)] * 4 + [("B", 10)] * 4, "p string, v int"
     )
-    emd_near = emd_by_partition(near, "p", F.col("v")).collect()[0].emd
-    emd_far = emd_by_partition(far, "p", F.col("v")).collect()[0].emd
-    ks_near = ks_by_partition(near, "p", F.col("v")).collect()[0].ks_d
-    ks_far = ks_by_partition(far, "p", F.col("v")).collect()[0].ks_d
+    emd_near = emd_by_partition(counts_sketch(near, "p", F.col("v")), "p").collect()[0].emd
+    emd_far = emd_by_partition(counts_sketch(far, "p", F.col("v")), "p").collect()[0].emd
+    ks_near = ks_by_partition(counts_sketch(near, "p", F.col("v")), "p").collect()[0].ks_d
+    ks_far = ks_by_partition(counts_sketch(far, "p", F.col("v")), "p").collect()[0].ks_d
     assert emd_far == 10 * emd_near
     assert ks_near == ks_far == 1.0
 
@@ -395,7 +453,7 @@ def test_entropy_by_partition_closed_form(spark):
         + [("B", 5), ("B", 5), ("B", 5)]          # degenerate → 0
     )
     df = spark.createDataFrame(rows, "p string, v int")
-    out = {r.p: r for r in entropy_by_partition(df, "p", F.col("v")).collect()}
+    out = {r.p: r for r in entropy_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()}
     assert abs(out["A"].entropy - math.log(2)) < 1e-12
     assert out["A"].n_values == 2
     assert out["B"].entropy == 0.0 and out["B"].n_values == 1
@@ -410,33 +468,28 @@ def test_drift_degenerate_single_partition_yields_null(spark):
     df = spark.createDataFrame(
         [("A", v) for v in (1, 2, 3, 4)], "p string, v int"
     )
-    k = ks_by_partition(df, "p", F.col("v")).collect()[0]
+    k = ks_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()[0]
     assert k.n_rest == 0
     assert k.ks_d is None and k.ks_p is None
-    e = emd_by_partition(df, "p", F.col("v")).collect()[0]
+    e = emd_by_partition(counts_sketch(df, "p", F.col("v")), "p").collect()[0]
     assert e.emd is None
 
 
 def test_drift_sketch_reuse_matches_direct(spark):
-    """precomputed= path ≡ direct computation (incl. a parquet
-    roundtrip of the sketch, as __spark_entry__._drift_sketch does)."""
+    """A materialized sketch (parquet roundtrip, as
+    __spark_entry__._drift_sketch does) ≡ the in-plan sketch."""
     import tempfile
 
-    from matric_spark.checks.drift import (
-        counts_sketch,
-        emd_by_partition,
-        entropy_by_partition,
-        ks_by_partition,
-    )
+    from matric_spark.checks.drift import emd_by_partition, entropy_by_partition
 
     rows = [("A", v % 7) for v in range(40)] + [("B", v % 5) for v in range(25)]
     df = spark.createDataFrame(rows, "p string, v int")
     path = tempfile.mkdtemp(prefix="sketch_") + "/s.parquet"
     counts_sketch(df, "p", F.col("v")).write.parquet(path)
     sk = spark.read.parquet(path)
-    for fn in (ks_by_partition, emd_by_partition, entropy_by_partition):
-        direct = sorted(map(tuple, fn(df, "p", F.col("v")).collect()))
-        shared = sorted(map(tuple, fn(None, "p", None, precomputed=sk).collect()))
+    for fn in (ks_by_partition, psi_by_partition, emd_by_partition, entropy_by_partition):
+        direct = sorted(map(tuple, fn(counts_sketch(df, "p", F.col("v")), "p").collect()))
+        shared = sorted(map(tuple, fn(sk, "p").collect()))
         assert direct == shared, fn.__name__
 
 

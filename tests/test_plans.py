@@ -132,6 +132,22 @@ def test_scalar_suite_is_single_aggregate(spark, transcripts_parquet):
     assert "Join" not in p
 
 
+def test_verdicts_drift_is_one_grid(spark, transcripts_parquet):
+    """KS and PSI come out of ONE partition × value grid over the
+    persisted sketch (checks/drift.drift_by_partition): its two cross
+    joins (parts × values, then the n_total scalar) are the only ones in
+    the verdicts plan. A second grid (e.g. a separate PSI bucket grid)
+    doubles them, and the extra sketch reads add InMemoryTableScans and
+    exchanges."""
+    from matric_spark.checks.suite import SuiteConfig, run_verdicts
+
+    t = spark.read.parquet(transcripts_parquet)
+    p = plan(run_verdicts(t, SuiteConfig()), "simple")  # one line per node
+    assert p.count("BroadcastNestedLoopJoin") + p.count("CartesianProduct") == 2
+    assert p.count("InMemoryTableScan") == 5
+    assert p.count("Exchange") <= 18
+
+
 def test_uniqueness_hash_phase_aggregates_on_long(spark, transcripts_parquet):
     from matric_spark.checks.suite import SuiteConfig
     from matric_spark.checks.uniqueness import duplicate_keys
