@@ -905,11 +905,11 @@ def q_streaming_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the documented precondition for sequence checks under
     micro-batching — streaming/validate.py docstring), consumed as a
     file-source stream one file per micro-batch (Trigger.AvailableNow),
-    state-appended per batch through the shared StateStore layout, and
-    assembled with the cross-batch folds of `stream_verdicts` — the
-    result must reproduce the one-shot batch verdict table
-    byte-identically. This gates the streaming path against DuckDB
-    end-to-end, upgrading the pytest differential (streaming ≡ batch,
+    appended per batch by `state.append_state`, the batch path's writer,
+    and read back by `stream_verdicts` under the batch path's one rule
+    (committed appends only, summed per partition) — the result must
+    reproduce the one-shot batch verdict table byte-identically. This
+    gates the streaming path against DuckDB end-to-end, upgrading the pytest differential (streaming ≡ batch,
     tests/test_streaming.py) to a value-hash oracle entry."""
     from matric_spark.streaming.validate import (
         await_or_raise,
@@ -993,8 +993,8 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_incremental_verdicts_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resumable EXTENDED suite vs the SAME oracle as verdicts_extended:
     crash after half the partitions, resume, and the assembled table —
-    rule pack + FD from per-partition state, volume from the completion
-    log — must equal the one-shot batch emission exactly."""
+    rule pack + FD from the committed `local_ext` rows, volume from the
+    completion log — must equal the one-shot batch emission exactly."""
     from matric_spark.state import run_incremental
 
     t = transcript_df(spark, sf_dir)

@@ -33,9 +33,10 @@ only two read the wide text column:
             sketch, whose size is |partitions| x |distinct values|, not
             |rows|.
 The verdict rows themselves come from ONE builder, core_verdicts, over
-(per-partition check metrics, drift sketch) — the batch suite, the
-resumable state path (state.assemble_verdicts) and the streaming path
-all call it, so thresholds and check ids exist once.
+(per-partition check metrics, drift sketch) — the batch suite calls it,
+and so does state.assemble_verdicts, through which the resumable and
+the streaming paths read their shared state — so thresholds and check
+ids exist once.
 Violation ROWS are materialized lazily on demand (separate filters that
 each push down to the scan), optionally capped.
 """
@@ -47,6 +48,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from matric_spark.checks.column_stats import partition_volume
+from matric_spark.checks.constraints import default_transcript_rules, fd_violations
 from matric_spark.checks.drift import counts_sketch, drift_by_partition
 from matric_spark.checks.referential import domain_violations
 from matric_spark.checks.sequence import out_of_order_turns
@@ -54,6 +57,13 @@ from matric_spark.checks.uniqueness import uniqueness_violations
 from matric_spark.schema import DEFAULT_ROLE_DOMAIN, DEFAULT_TOOL_DOMAIN
 
 VERDICT_COLUMNS = ["part", "check_id", "metric", "status"]
+
+# the extended check families (run_verdicts_extended), defined once for
+# the batch and the resumable emission; rules are Column expressions,
+# which need a live session, so the pack is built per call
+TRANSCRIPT_RULES = default_transcript_rules
+FD_DEPENDENTS = ["text", "role"]
+VOLUME_ABS_DELTA = 0.5
 
 
 @dataclass
@@ -204,27 +214,22 @@ def verdict_rows(wide: DataFrame, checks: dict[str, tuple[Column, Column]]) -> D
     ).select("part", "check_id", F.col("ms.m").alias("metric"), F.col("ms.s").alias("status"))
 
 
-def run_verdicts_extended(
-    df: DataFrame,
-    cfg: SuiteConfig | None = None,
-    rules=None,
-    fd_dependents: list[str] | None = None,
-    volume_abs_delta: float = 0.5,
-) -> DataFrame:
+def run_verdicts_extended(df: DataFrame, cfg: SuiteConfig | None = None) -> DataFrame:
     """Core verdicts + the declarative check families, one verdict table.
 
     Unions run_verdicts with three more per-partition check families in
     the same (part, check_id, metric, status) schema:
     - ``rule_<name>``: violation count per cross-field implication rule
-      (checks/constraints.Rule) — ALL rules ride ONE conditional
-      aggregation scan, the scalar_check_metrics pattern.
+      of TRANSCRIPT_RULES() (checks/constraints.Rule) — ALL rules ride
+      ONE conditional aggregation scan, the scalar_check_metrics
+      pattern.
     - ``fd_conflict``: intra-partition functional-dependency conflicts —
-      (key) groups within the partition whose copies disagree on any
-      dependent. Cross-partition conflicts are partition_spillover /
-      uniqueness territory; scoping FD to the partition keeps the
+      (key) groups within the partition whose copies disagree on any of
+      FD_DEPENDENTS. Cross-partition conflicts are partition_spillover
+      / uniqueness territory; scoping FD to the partition keeps the
       verdict attributable to the partition that must be re-validated.
     - ``volume_delta``: month-over-month ingest-volume swing; fails on
-      |delta| > volume_abs_delta or any skipped calendar month. The
+      |delta| > VOLUME_ABS_DELTA or any skipped calendar month. The
       first populated partition has no predecessor → NULL metric,
       'pass' (nothing to compare against).
 
@@ -234,31 +239,18 @@ def run_verdicts_extended(
     row-count aggregate (1 scan over the partition-count table). Joins
     between the per-partition tables are partition-count-sized.
     """
-    from matric_spark.checks.column_stats import partition_volume
-    from matric_spark.checks.constraints import default_transcript_rules
-
     cfg = cfg or SuiteConfig()
     p = cfg.partition_col
-    rules = rules if rules is not None else default_transcript_rules()
-    fd_dependents = fd_dependents or ["text", "role"]
-
     core = run_verdicts(df, cfg)
 
     vol = partition_volume(df, p).select(
         F.col(p).alias("part"), "delta_pct", "gap_months"
     )
-    wide = extended_partition_metrics(df, cfg, rules, fd_dependents).join(
-        vol, "part", "left"
-    )
-    return core.unionByName(_extended_rows(wide, rules, volume_abs_delta))
+    wide = extended_partition_metrics(df, cfg).join(vol, "part", "left")
+    return core.unionByName(_extended_rows(wide))
 
 
-def extended_partition_metrics(
-    df: DataFrame,
-    cfg: SuiteConfig,
-    rules,
-    fd_dependents: list[str],
-) -> DataFrame:
+def extended_partition_metrics(df: DataFrame, cfg: SuiteConfig) -> DataFrame:
     """PARTITION-LOCAL extended metrics (part, rule_<name>...,
     fd_conflict) — rule counts ride one conditional-aggregation pass;
     FD reuses constraints.fd_violations with the partition key prepended
@@ -268,17 +260,15 @@ def extended_partition_metrics(
     is what makes the extended families RESUMABLE: the incremental path
     (state.run_incremental extended=True) appends exactly this table per
     completed partition."""
-    from matric_spark.checks.constraints import fd_violations
-
     p = cfg.partition_col
     rule_agg = df.groupBy(F.col(p).alias("part")).agg(
         *[
             F.sum(r.violated().cast("long")).alias(f"rule_{r.name}")
-            for r in rules
+            for r in TRANSCRIPT_RULES()
         ]
     )
     fd = (
-        fd_violations(df, [p, *cfg.key], fd_dependents)
+        fd_violations(df, [p, *cfg.key], FD_DEPENDENTS)
         .groupBy(F.col(p).alias("part"))
         .agg(F.count(F.lit(1)).alias("fd_conflict"))
     )
@@ -287,19 +277,17 @@ def extended_partition_metrics(
     )
 
 
-def _extended_rows(
-    wide: DataFrame, rules, volume_abs_delta: float
-) -> DataFrame:
+def _extended_rows(wide: DataFrame) -> DataFrame:
     """Verdict rows of the extended families' wide metrics (part,
     rule_<name>..., fd_conflict, delta_pct, gap_months) — SHARED by
     the batch path (run_verdicts_extended) and the resumable path
     (state.run_incremental extended=True) so the two emissions can never
     diverge in check ids, thresholds, or status logic."""
-    counts = [f"rule_{r.name}" for r in rules] + ["fd_conflict"]
+    counts = [f"rule_{r.name}" for r in TRANSCRIPT_RULES()] + ["fd_conflict"]
     checks = {c: (F.col(c), F.col(c) > 0) for c in counts}
     checks["volume_delta"] = (
         F.col("delta_pct"),
-        (F.abs(F.col("delta_pct")) > volume_abs_delta) | (F.col("gap_months") > 0),
+        (F.abs(F.col("delta_pct")) > VOLUME_ABS_DELTA) | (F.col("gap_months") > 0),
     )
     return verdict_rows(wide, checks)
 

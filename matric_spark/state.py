@@ -7,19 +7,32 @@ lineage is a first-class STATE TABLE (partitioned parquet in the
 sandbox; 1:1 `writeTo(...).append()` on Iceberg, with the snapshot id
 as the fingerprint):
 
-    state/local/      per-partition verdicts for PARTITION-LOCAL checks
-                      (ref_role, ref_tool, null_text, null_ts, seq_order)
+    state/local/      (part, n_rows, ref_role, ref_tool, null_text,
+                      null_ts, seq_order) PARTITION-LOCAL check counts
+    state/local_ext/  (part, rule_<name>..., fd_conflict) — extended
+                      runs only
     state/key_index/  (conv_id, turn_idx, part, cnt) — per-partition key
                       counts; cross-partition uniqueness is an aggregate
                       of this index, never a re-scan. On a cluster this
                       table is bucketed by key so the merge is
                       shuffle-free.
-    state/sketch/     (part, v, c) value-counts sketch — KS and PSI for
+    state/sketch/     (p, v, c) value-counts sketch — KS and PSI for
                       EVERY partition are recomputed from the merged
                       sketch each run (sketch-sized work), because each
                       partition's drift baseline is the complement of
                       the whole table and so changes as partitions land.
-    state/log/        (part, fingerprint, run_id, n_rows) completion log
+    state/log/        (part, run_id, n_rows, append_id) completion log
+
+Every relation also carries `fingerprint` and `append_id`. One writer,
+`append_state`, appends all of them for one batch run's new partitions
+or one micro-batch, stamping every row with a fresh `append_id`, the log
+LAST. One rule reads them (`StateStore.committed`): a row counts iff
+the log commits its (part, append_id). An append torn by a crash, or
+one whose log was lost, is invisible, and a re-run appends under a new
+id, so no row counts twice and readers sum instead of deduplicating:
+`verdicts_from_state` sums local and sketch rows per part and per
+(p, v), which also merges a partition that a stream split across
+micro-batches.
 
 Check taxonomy that makes resume correct:
 - row-local checks → attributable to a partition outright.
@@ -34,23 +47,32 @@ A partition is COMPLETE for an input `fingerprint` iff a log row exists;
 completed partitions are pruned from the scan by a partition-column
 predicate (partition pruning on Iceberg). If the input changes, the
 fingerprint changes and everything re-validates (SURVEY §7.3e).
-Differential guarantee (tests/test_state.py): crash-resume ≡ fresh ≡
-the one-shot batch suite.
+Differential guarantee (tests/test_state.py, tests/test_streaming.py):
+crash-resume ≡ fresh ≡ streamed ≡ the one-shot batch suite, and a
+streamed state dir reads the same through `run_incremental`.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from matric_spark.checks.column_stats import volume_profile
 from matric_spark.checks.drift import counts_sketch
 from matric_spark.checks.sequence import out_of_order_turns
-from matric_spark.checks.suite import SuiteConfig, core_verdicts, scalar_check_metrics
+from matric_spark.checks.suite import (
+    SuiteConfig,
+    _extended_rows,
+    core_verdicts,
+    extended_partition_metrics,
+    scalar_check_metrics,
+)
 
-_LOG_SCHEMA = "part int, run_id string, n_rows long, fingerprint string"
+_LOG_SCHEMA = "part int, run_id string, n_rows long, append_id string, fingerprint string"
 
 
 def input_fingerprint(path: str) -> str:
@@ -152,32 +174,36 @@ class StateStore:
             return None
         return df.filter(F.col("fingerprint") == fingerprint).drop("fingerprint")
 
+    def log(self, fingerprint: str) -> DataFrame | None:
+        """The completion log for `fingerprint`: every row commits itself."""
+        return self._for("log", fingerprint, _LOG_SCHEMA)
+
     def completed_partitions(self, fingerprint: str) -> list[int]:
-        log = self._for("log", fingerprint, _LOG_SCHEMA)
+        log = self.log(fingerprint)
         if log is None:
             return []
         return [r.part for r in log.select("part").distinct().collect()]
 
-    @staticmethod
-    def _no_run_id(df: DataFrame) -> DataFrame:
-        return df.drop("run_id") if "run_id" in df.columns else df
+    def is_committed(self, run_id: str, fingerprint: str) -> bool:
+        """Whether the log holds any commit of `run_id` (one tiny job)."""
+        log = self.log(fingerprint)
+        return log is not None and bool(log.filter(F.col("run_id") == run_id).head(1))
 
-    def key_index_for(self, fingerprint: str, cfg) -> DataFrame:
-        """Merged key index with batch/resume dedup semantics: appends
-        are whole partitions, so duplicate (key, part) rows across
-        run_ids are replays of identical data — keep one."""
-        return self._no_run_id(
-            self._for("key_index", fingerprint).dropDuplicates(
-                [*cfg.key, "part"]
-            )
-        )
-
-    def sketch_for(self, fingerprint: str) -> DataFrame:
-        """Merged drift sketch, whole-partition replay dedup (see
-        key_index_for)."""
-        return self._no_run_id(
-            self._for("sketch", fingerprint).dropDuplicates(["p", "v"])
-        )
+    def committed(self, name: str, fingerprint: str) -> DataFrame | None:
+        """The rows of state relation `name` that count: those whose
+        (part, append_id) the completion log commits. Rows of a torn
+        append (a crash before its log rows landed) and of an append
+        whose log was lost never match, so no row is counted twice and
+        readers need no dedup. The log side is partitions x appends
+        rows, so the semi-join is a broadcast."""
+        df, log = self._for(name, fingerprint), self.log(fingerprint)
+        if df is None or log is None:
+            return None
+        part = "p" if name == "sketch" else "part"
+        commits = log.select(F.col("part").alias(part), "append_id")
+        return df.join(
+            F.broadcast(commits), [part, "append_id"], "left_semi"
+        ).drop("append_id")
 
     # ------------------------------------------------- schema evolution
 
@@ -295,87 +321,93 @@ def run_incremental(
         remaining = remaining.filter(F.col(p).isin(parts))
 
     if remaining.select(p).limit(1).count() > 0:
-        # ---- partition-local state for the new partitions ----
-        scalar = scalar_check_metrics(remaining, cfg)
-
-        # sequence needs whole conversations (they span partitions):
-        # bounded boundary re-read via semi-join, verdicts attributed to
-        # each row's own partition
-        convs = remaining.select(*cfg.key[:1]).distinct()
-        full_convs = transcripts.join(convs, cfg.key[:1], "left_semi")
-        seq = (
-            out_of_order_turns(full_convs)
-            .join(remaining.select(p).distinct(), p, "left_semi")
-            .groupBy(F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("seq_order"))
+        # sequence needs whole conversations (they span partitions): a
+        # bounded boundary re-read via semi-join
+        convs = transcripts.join(
+            remaining.select(*cfg.key[:1]).distinct(), cfg.key[:1], "left_semi"
         )
-        local = (
-            scalar.join(seq, "part", "left")
-            .fillna(0, subset=["seq_order"])
-            .withColumn("run_id", F.lit(run_id))
-        )
-        store._append(local, "local", fingerprint)
+        append_state(store, remaining, convs, run_id, fingerprint, cfg, extended)
 
-        # key index: per-partition key counts (uniqueness merges these).
-        # run_id rides along so readers can tell appends apart: the batch
-        # path dedups on the natural key (a crashed run re-appends whole
-        # partitions → identical rows under a new run_id), the streaming
-        # path dedups on (run_id, natural key) and SUMS (distinct
-        # micro-batches legitimately append the same key again).
-        key_index = (
-            remaining.groupBy(*cfg.key, F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        store._append(key_index, "key_index", fingerprint)
-
-        # drift sketch: per-partition value counts (same run_id contract)
-        sketch = counts_sketch(remaining, p, F.length("text")).withColumn(
-            "run_id", F.lit(run_id)
-        )
-        store._append(sketch, "sketch", fingerprint)
-
-        if extended:
-            # BEFORE the log append: the resume contract is "complete iff
-            # a log row exists", so every state relation must be durable
-            # before the partition is marked complete — a crash in the
-            # gap would otherwise prune the partition from all future
-            # scans while its extended state is missing forever
-            from matric_spark.checks.constraints import (
-                default_transcript_rules,
-            )
-            from matric_spark.checks.suite import extended_partition_metrics
-
-            ext = extended_partition_metrics(
-                remaining, cfg, default_transcript_rules(), ["text", "role"]
-            ).withColumn("run_id", F.lit(run_id))
-            store._append(ext, "local_ext", fingerprint)
-
-        # the log append comes LAST: it is the commit point
-        log = (
-            remaining.groupBy(F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .select("part", F.lit(run_id).alias("run_id"), "n_rows")
-        )
-        store._append(log, "log", fingerprint)
-
-    # batch/resume semantics: appends are WHOLE partitions, so rows
-    # repeated under a different run_id (crash between state append and
-    # log append, then re-run) are exact duplicates — dedup on the
-    # natural key. Streaming passes per-batch folds instead
-    # (streaming/validate.stream_verdicts) because there the same
-    # natural key across run_ids is NEW data, not a replay.
-    local = store._for("local", fingerprint)
-    assert local is not None, "no completed partitions in state"
-    core = assemble_verdicts(
-        local.dropDuplicates(["part"]).drop("run_id"),
-        store.key_index_for(fingerprint, cfg),
-        store.sketch_for(fingerprint),
-        cfg,
-    )
+    core = verdicts_from_state(store, fingerprint, cfg)
     if extended:
         return assemble_verdicts_extended(core, store, fingerprint)
     return core
+
+
+def append_state(
+    store: StateStore,
+    rows: DataFrame,
+    convs: DataFrame,
+    run_id: str,
+    fingerprint: str,
+    cfg: SuiteConfig,
+    extended: bool = False,
+) -> None:
+    """Append the state of `rows` (whole partitions for a batch run, one
+    micro-batch for a stream) — the ONE writer of the state relations.
+
+    `convs` holds the whole conversations of `rows` for the sequence
+    check; its counts are attributed to each row's own partition, and
+    the left join from the scalar metrics drops partitions not in
+    `rows`. Every row of this call, log rows included, carries one fresh
+    `append_id`; the log goes LAST, so the rows count (StateStore.
+    committed) only once the log commits their (part, append_id).
+    """
+    p = cfg.partition_col
+    seq = (
+        out_of_order_turns(convs)
+        .groupBy(F.col(p).alias("part"))
+        .agg(F.count(F.lit(1)).alias("seq_order"))
+    )
+    state = {
+        "local": scalar_check_metrics(rows, cfg)
+        .join(seq, "part", "left")
+        .fillna(0, subset=["seq_order"]),
+        # per-partition key counts: uniqueness is their global sum
+        "key_index": rows.groupBy(*cfg.key, F.col(p).alias("part")).agg(
+            F.count(F.lit(1)).alias("cnt")
+        ),
+        "sketch": counts_sketch(rows, p, F.length("text")),
+    }
+    if extended:
+        state["local_ext"] = extended_partition_metrics(rows, cfg)
+    # LAST: the commit point — a crash before it leaves this append's
+    # rows uncounted and its partitions incomplete, to be re-appended
+    state["log"] = (
+        rows.groupBy(F.col(p).alias("part"))
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .select("part", F.lit(run_id).alias("run_id"), "n_rows")
+    )
+    append_id = F.lit(uuid.uuid4().hex)
+    for name, df in state.items():
+        store._append(df.withColumn("append_id", append_id), name, fingerprint)
+
+
+def _sum_by(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Sum every non-key column per `keys`: the committed appends of one
+    partition (a partition a stream split across micro-batches) are
+    distinct data, so their counts add."""
+    return df.groupBy(*keys).agg(
+        *[F.sum(c).alias(c) for c in df.columns if c not in keys]
+    )
+
+
+def verdicts_from_state(
+    store: StateStore, fingerprint: str, cfg: SuiteConfig
+) -> DataFrame:
+    """The core verdict table from the committed state of `fingerprint`,
+    whichever writer appended it: local and sketch rows summed per part
+    and per (p, v); the key index as is, since uniqueness already sums
+    its counts."""
+    local = store.committed("local", fingerprint)
+    if local is None:
+        raise ValueError(f"no committed state for fingerprint {fingerprint!r}")
+    return assemble_verdicts(
+        _sum_by(local, ["part"]),
+        store.committed("key_index", fingerprint),
+        _sum_by(store.committed("sketch", fingerprint), ["p", "v"]),
+        cfg,
+    )
 
 
 def assemble_verdicts(
@@ -386,9 +418,9 @@ def assemble_verdicts(
 ) -> DataFrame:
     """Full verdict table from state relations only — no data re-scan.
 
-    Inputs, already deduped or folded by the caller: ``local`` has one
-    row of partition-local metrics per partition (part, ref_role,
-    ref_tool, null_text, null_ts, seq_order), ``key_index`` the
+    Inputs, already summed by the caller (verdicts_from_state): ``local``
+    has one row of partition-local metrics per partition (part, n_rows,
+    ref_role, ref_tool, null_text, null_ts, seq_order), ``key_index`` the
     per-partition key counts (*cfg.key, part, cnt), ``sketch`` the drift
     (p, v, c) counts. Uniqueness is global: it folds the key index (keys
     duplicated ANYWHERE → per-partition participating-row counts). KS,
@@ -408,24 +440,19 @@ def assemble_verdicts_extended(
     core: DataFrame,
     store: StateStore,
     fingerprint: str,
-    volume_abs_delta: float = 0.5,
 ) -> DataFrame:
     """Extended verdict table from state only — the resumable emission of
     checks/suite.run_verdicts_extended: the ``core`` verdicts plus the
     extended families' rows.
 
-    Rule/FD metrics come from the per-partition `local_ext` appends
-    (whole-partition replays deduped on part, like `local`); the volume
-    check derives from the completion log's per-partition row counts via
-    the SAME volume_profile stage the batch operator uses, and the
-    verdict rows are built by the SAME _extended_rows unpivot — so the
-    batch and resumed emissions cannot diverge.
+    Rule/FD metrics come from the committed `local_ext` rows, summed per
+    part like `local`; the volume check derives from the completion
+    log's per-partition row counts via the SAME volume_profile stage the
+    batch operator uses, and the verdict rows are built by the SAME
+    _extended_rows unpivot — so the batch and resumed emissions cannot
+    diverge.
     """
-    from matric_spark.checks.column_stats import volume_profile
-    from matric_spark.checks.constraints import default_transcript_rules
-    from matric_spark.checks.suite import _extended_rows
-
-    ext = store._for("local_ext", fingerprint)
+    ext = store.committed("local_ext", fingerprint)
     if ext is None:
         raise ValueError(
             "no extended state for this fingerprint: its partitions were "
@@ -433,7 +460,7 @@ def assemble_verdicts_extended(
             "them from re-scanning. Re-validate under a fresh state_dir "
             "or fingerprint with extended=True."
         )
-    ext = ext.dropDuplicates(["part"]).drop("run_id")
+    ext = _sum_by(ext, ["part"])
 
     # every completed partition must have extended state (a fingerprint
     # partly completed by non-extended runs would otherwise silently
@@ -449,19 +476,13 @@ def assemble_verdicts_extended(
             "fingerprint with extended=True throughout."
         )
 
-    log = (
-        store._for("log", fingerprint, _LOG_SCHEMA)
-        .dropDuplicates(["part"])
-        .select("part", "n_rows")
-    )
+    log = _sum_by(store.log(fingerprint).select("part", "n_rows"), ["part"])
     vol = volume_profile(log, "part").select(
         "part", "delta_pct", "gap_months"
     )
 
     wide = ext.join(vol, "part", "left")
-    return core.unionByName(
-        _extended_rows(wide, default_transcript_rules(), volume_abs_delta)
-    )
+    return core.unionByName(_extended_rows(wide))
 
 
 def metric_history_drift(
@@ -484,13 +505,12 @@ def metric_history_drift(
     checks = ["ref_role", "ref_tool", "null_text", "null_ts", "seq_order"]
 
     def rates(fp: str, tag: str) -> DataFrame:
-        local = store._for("local", fp)
+        local = store.committed("local", fp)
         # unknown fingerprint = readable relation, zero rows — both are
         # "no completed state" (the head(1) probe is state-sized)
         if local is None or not local.head(1):
             raise ValueError(f"no completed state for fingerprint {fp!r}")
-        local = local.dropDuplicates(["part"])
-        packed = local.select(
+        packed = _sum_by(local, ["part"]).select(
             "part",
             *[
                 (

@@ -7,12 +7,13 @@ based, not streaming-state based):
 - `stream_transcripts` reads a directory as a file-source stream with
   the transcript schema (new parquet files = new micro-batches; on a
   cluster this is an Iceberg/Kafka source).
-- `validated_stream` runs EVERY micro-batch through the same
-  partition-local state appends as `state.run_incremental` (scalar
-  verdicts, key index, drift sketch, completion log keyed by batch), so
-  a streaming deployment and a batch backfill share one state table and
-  one verdict semantics — the batch/streaming differential test asserts
-  exactly that equivalence.
+- `validated_stream` appends EVERY micro-batch through the writer
+  `state.run_incremental` uses (`state.append_state`), and
+  `stream_verdicts` reads it back through the same reader
+  (`state.verdicts_from_state`), so a streaming deployment and a batch
+  backfill share one state table and one verdict semantics: a streamed
+  state dir gives the batch verdicts through either
+  (tests/test_streaming.py).
 - `windowed_rates` is the genuinely-streaming piece: event-time windows
   + watermark for late data, counting turns and violation candidates
   per (window, partition) — built-in windowed aggregation (the checks
@@ -23,13 +24,12 @@ based, not streaming-state based):
 
 from __future__ import annotations
 
-import os
-
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matric_spark.checks.suite import SuiteConfig
-from matric_spark.schema import DEFAULT_ROLE_DOMAIN
+from matric_spark.state import StateStore, append_state, verdicts_from_state
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -97,90 +97,33 @@ def validated_stream(
 ):
     """Start a foreachBatch query appending per-micro-batch check state.
 
-    Each batch contributes:
-      - partition-local scalar verdicts + seq counts (batch-scoped),
-      - key-index rows (cross-partition/cross-batch uniqueness folds
-        them exactly like the batch path),
-      - drift counts sketch rows,
-    into the SAME StateStore layout as `state.run_incremental`; final
-    verdicts come from `stream_verdicts`, which feeds the same
-    `state.assemble_verdicts` as the batch resume path, so streaming
-    ingestion and batch backfill are interchangeable (differential-tested).
-    Exactly-once: foreachBatch may retry a batch; ALL appends (local,
-    key index, sketch, log) carry the batch id in `run_id`, and
-    `stream_verdicts` dedups on (run_id, natural key) before summing —
-    retries collapse, while legitimate re-occurrences of a key in later
-    batches are preserved (they are new data, not replays).
+    Each micro-batch goes through `state.append_state`, the writer
+    `state.run_incremental` uses, as one append under run_id
+    `stream-{batch_id}`: its local counts (sequence ordering checked
+    within the batch), key-index rows and drift sketch, then its log
+    rows. Final verdicts come from `stream_verdicts`.
+
+    Exactly-once follows Spark's batchId idempotency for foreachBatch:
+    a batch whose `stream-{batch_id}` the log already commits is
+    skipped, so a re-delivered batch (a restart from an older
+    checkpoint, or a fresh checkpoint over the same input) counts once;
+    a batch that crashed before its log rows landed left no committed
+    rows and is appended again.
     """
     cfg = cfg or SuiteConfig()
-    p = cfg.partition_col
-
-    from matric_spark.checks.drift import counts_sketch
-    from matric_spark.checks.sequence import out_of_order_turns
-    from matric_spark.checks.suite import scalar_check_metrics
-    from matric_spark.state import StateStore
-
     store = StateStore(spark, state_dir)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
+        run_id = f"stream-{batch_id}"
+        if store.is_committed(run_id, fingerprint) or batch.isEmpty():
             return
-        # four state appends below = four separate jobs over this
-        # micro-batch; persist once so the batch source (and any
-        # upstream projection) is scanned a single time instead of four
-        # — at bench scale this is most of the per-batch fixed cost
-        # beyond the constraint suite itself
-        from pyspark import StorageLevel
-
+        # the appends are separate jobs over this micro-batch; persist
+        # once so the source is scanned a single time
         batch.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            _process_persisted(batch, batch_id)
+            append_state(store, batch, batch, run_id, fingerprint, cfg)
         finally:
             batch.unpersist(blocking=False)
-
-    def _process_persisted(batch: DataFrame, batch_id: int) -> None:
-        run_id = f"stream-{batch_id}"
-        scalar = scalar_check_metrics(batch, cfg)
-        seq = (
-            out_of_order_turns(batch)
-            .groupBy(F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("seq_order"))
-        )
-        # every per-batch relation is partitions-scale tiny (local/
-        # sketch/log) or ids+counts (key_index) — coalesce the appends
-        # so the state dir holds a handful of files per batch instead
-        # of shuffle.partitions-many KB-sized ones (a micro-batched run
-        # otherwise reads hundreds of tiny parquet files at assembly)
-        local = (
-            scalar.join(seq, "part", "left")
-            .fillna(0, subset=["seq_order"])
-            .withColumn("run_id", F.lit(run_id))
-        )
-        store._append(local.coalesce(1), "local", fingerprint)
-
-        # run_id = batch id: stream_verdicts dedups appends on
-        # (run_id, natural key) — a foreachBatch RETRY (same batch id)
-        # collapses, while a genuinely new batch carrying the same
-        # natural key again is summed, so cross-batch duplicate keys and
-        # partition-spanning sketch counts stay correct.
-        key_index = (
-            batch.groupBy(*cfg.key, F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        store._append(key_index.coalesce(4), "key_index", fingerprint)
-
-        sketch = counts_sketch(batch, p, F.length("text")).withColumn(
-            "run_id", F.lit(run_id)
-        )
-        store._append(sketch.coalesce(1), "sketch", fingerprint)
-
-        log = (
-            batch.groupBy(F.col(p).alias("part"))
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .select("part", F.lit(run_id).alias("run_id"), "n_rows")
-        )
-        store._append(log.coalesce(1), "log", fingerprint)
 
     src = stream_transcripts(spark, input_dir, max_files_per_trigger)
     return (
@@ -197,54 +140,17 @@ def stream_verdicts(
     fingerprint: str = "stream",
     cfg: SuiteConfig | None = None,
 ) -> DataFrame:
-    """Assemble the verdict table from streaming-appended state: the
-    per-batch folds below go straight into `state.assemble_verdicts`,
-    the assembler the batch resume path uses.
-
-    NOTE on semantics vs batch: micro-batches may split one data
-    partition across appends, so EVERY state relation is folded per
-    batch here — local metrics, the key index, and the drift sketch are
-    deduped on (run_id, natural key) to absorb foreachBatch retries,
-    then SUMMED across batches. Deduping on the natural key alone (the
-    batch/resume semantics) would silently collapse a duplicate key
-    split across two micro-batches to uniqueness=0/pass and undercount
-    sketch values whenever a data partition spans batches. Sequence
-    ordering is validated within each micro-batch (cross-batch
-    reordering needs event-time windows — `windowed_rates` — or the
-    batch path)."""
-    cfg = cfg or SuiteConfig()
-    from matric_spark.state import StateStore, assemble_verdicts
-
-    store = StateStore(spark, state_dir)
-    # fold multi-batch local rows (one per (part, batch)) into one row
-    # per partition; replayed batches dedup on (part, run_id) first
-    local = store._for("local", fingerprint)
-    assert local is not None, "no streamed batches in state"
-    folded = (
-        local.dropDuplicates(["part", "run_id"])
-        .drop("run_id")
-        .groupBy("part")
-        .agg(
-            *[
-                F.sum(c).alias(c)
-                for c in local.columns
-                if c not in ("part", "run_id")
-            ]
-        )
+    """The verdict table from streaming-appended state:
+    `state.verdicts_from_state`, the reader `state.run_incremental`
+    uses. Only log-committed appends count, and a data partition split
+    across micro-batches is summed over them, so a duplicate key split
+    across two batches fails uniqueness and the drift sketch counts
+    every value once. Sequence ordering is validated within each
+    micro-batch (cross-batch reordering needs event-time windows —
+    `windowed_rates` — or the batch path)."""
+    return verdicts_from_state(
+        StateStore(spark, state_dir), fingerprint, cfg or SuiteConfig()
     )
-    key_folded = (
-        store._for("key_index", fingerprint)
-        .dropDuplicates(["run_id", *cfg.key, "part"])
-        .groupBy(*cfg.key, "part")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    sketch_folded = (
-        store._for("sketch", fingerprint)
-        .dropDuplicates(["run_id", "p", "v"])
-        .groupBy("p", "v")
-        .agg(F.sum("c").alias("c"))
-    )
-    return assemble_verdicts(folded, key_folded, sketch_folded, cfg)
 
 
 def rule_violation_stream(stream: DataFrame, rules=None, id_cols=None) -> DataFrame:

@@ -115,3 +115,21 @@ def test_manifest_prefix_covers_every_family():
     all_fams = {m["family"] for m in man.values()}
     prefix_fams = {man[n]["family"] for n in names[:50]}
     assert all_fams == prefix_fams, all_fams - prefix_fams
+
+
+def test_tools_import_their_own_checkout():
+    """A tool run from another checkout must check THAT checkout's code:
+    no tool puts an absolute path literal on sys.path (it derives the
+    root from its own file instead)."""
+    import re
+
+    tools = os.path.join(_REPO, "tools")
+    pinned = [
+        f
+        for f in sorted(os.listdir(tools))
+        if f.endswith(".py")
+        and re.search(
+            r"sys\.path\.insert\(\s*0,\s*['\"]/", open(os.path.join(tools, f)).read()
+        )
+    ]
+    assert not pinned, pinned

@@ -60,6 +60,19 @@ def test_changed_fingerprint_revalidates(spark, tiny_transcripts, tmp_path, cfg)
     assert _rows(out) == _rows(run_verdicts(tiny_transcripts, cfg))
 
 
+def test_rerun_after_lost_log_equals_batch(spark, tiny_transcripts, tmp_path, cfg):
+    """A finished run whose completion log is lost re-validates every
+    partition under the SAME run_id; the first run's state rows must not
+    count a second time."""
+    import shutil
+
+    sd = tmp_path / "state"
+    run_incremental(spark, tiny_transcripts, str(sd), "run1", "fp1", cfg)
+    shutil.rmtree(sd / "log")
+    out = run_incremental(spark, tiny_transcripts, str(sd), "run1", "fp1", cfg)
+    assert _rows(out) == _rows(run_verdicts(tiny_transcripts, cfg))
+
+
 def test_cross_partition_duplicates_found_incrementally(spark, tmp_path, cfg):
     """A key duplicated ACROSS partitions (one row in each) must still be
     flagged when the partitions were validated in separate runs — the

@@ -46,6 +46,61 @@ def test_streaming_equals_batch_verdicts(spark, tiny_transcripts, staged_stream_
     assert _rows(out) == _rows(run_verdicts(tiny_transcripts, SuiteConfig()))
 
 
+def test_stream_redelivery_counts_once(spark, tiny_transcripts, staged_stream_dir, tmp_path):
+    """A second stream over the same input with a fresh checkpoint
+    re-delivers batch ids 0..2 into the same state dir; each batch must
+    still count once."""
+    from matric_spark.streaming.validate import stream_verdicts, validated_stream
+
+    sd = str(tmp_path / "state")
+    for ckpt in ("ckpt1", "ckpt2"):
+        q = validated_stream(
+            spark, staged_stream_dir, state_dir=sd, checkpoint_dir=str(tmp_path / ckpt)
+        )
+        await_or_raise(q, 120)
+    out = stream_verdicts(spark, sd)
+    assert _rows(out) == _rows(run_verdicts(tiny_transcripts, SuiteConfig()))
+
+
+def test_streamed_state_reads_the_same_through_run_incremental(spark, tmp_path):
+    """One state protocol: a streamed state dir read back through
+    run_incremental under the stream's fingerprint (every partition is
+    complete, nothing is left to scan) gives the batch verdicts. Part 1
+    spans two micro-batches, with its null text in one and its
+    out-of-order turn in the other, so neither may be dropped."""
+    import datetime as dt
+
+    from matric_spark.state import run_incremental
+    from matric_spark.streaming.validate import TRANSCRIPT_DDL, validated_stream
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def r(conv, idx, role, text, sec, part):
+        return (conv, idx, role, text, None, t0 + dt.timedelta(seconds=sec), part)
+
+    files = [
+        [r("A", 0, "user", "hi", 0, 1), r("A", 1, "assistant", None, 10, 1)],
+        [
+            r("B", 0, "user", "question", 0, 1),
+            r("B", 1, "assistant", "answer!", 20, 1),
+            r("B", 2, "user", "thanks", 5, 1),  # ts goes backwards
+        ],
+        [r("C", 0, "system", "sys prompt", 0, 2), r("C", 1, "user", "hey", 10, 2)],
+    ]
+    d = str(tmp_path / "incoming")
+    for rows in files:  # one conversation per file = per micro-batch
+        spark.createDataFrame(rows, TRANSCRIPT_DDL).coalesce(1).write.mode(
+            "append"
+        ).parquet(d)
+    sd = str(tmp_path / "state")
+    q = validated_stream(spark, d, state_dir=sd, checkpoint_dir=str(tmp_path / "ckpt"))
+    await_or_raise(q, 120)
+
+    df = spark.read.schema(TRANSCRIPT_DDL).parquet(d)
+    out = run_incremental(spark, df, sd, "batch", "stream")
+    assert _rows(out) == _rows(run_verdicts(df, SuiteConfig()))
+
+
 def test_streaming_cross_batch_duplicate_key_fails_uniqueness(spark, tmp_path):
     """Regression: a duplicate (conv_id, turn_idx) SPLIT ACROSS two
     micro-batches must be reported exactly like the batch suite reports

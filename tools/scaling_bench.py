@@ -42,9 +42,11 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _PREPARE = r"""
 import os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import functions as F
 from matric_spark.session import get_spark
 from matric_spark.sources.transcripts_view import transcript_df
@@ -72,7 +74,7 @@ print("PREPARED")
 
 _CHILD = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from matric_spark.session import get_spark
 from matric_spark.checks.suite import SuiteConfig, run_verdicts
 
@@ -165,8 +167,9 @@ def wait_clean(low: int, high: int, threshold: float, timeout: float,
 
 
 def _run(code: str, env: dict) -> str:
+    """Run `code` in a fresh interpreter that imports this checkout."""
     out = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True
+        [sys.executable, "-c", code, REPO], env=env, capture_output=True, text=True
     )
     if out.returncode != 0:
         raise RuntimeError(f"child failed:\n{out.stderr[-2000:]}")
